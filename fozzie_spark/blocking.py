@@ -10,6 +10,12 @@ Blocking families (SURVEY.md §2.2/§4):
 - length-band join for edit distances  (ref: string/edit/mod.rs:35-48)
 - q-gram inverted index (+ count lower bound) for edit & ngram methods
   (ref: string/ngram/jaccard.rs:118-177)
+- id-keyed SELF-join builders over precomputed profile frames (the
+  er_pipeline and textops path; shuffle fixed-width ids + tokens, never
+  key strings): PPJoin for jaccard and the edit family's share-any-gram
+  index (`jaccard_candidates_ids`), tau+1 rarity prefixes for qgram,
+  weighted AllPairs for cosine, (char, occurrence) tokens for jaro/jw
+- sorted neighborhood (the recall patch behind every hot-token df cap)
 - numeric banding for difference joins (ref: difference/mod.rs:19-43)
 - grid cells for k-D distance joins
 - overlap bins for interval joins (replaces the reference's interval tree)
@@ -545,6 +551,160 @@ def _popcount_cut(s_min, sig_words: int, suffix: str = "_2"):
         for i in range(sig_words)
     )
     return (s_min < 1) | (shared >= F.greatest(F.floor(s_min / 2) - 2, F.lit(1)))
+
+
+def _sig_bit(h, i: int, sig_words: int):
+    """Gram hash `h`'s bit in Bloom word i (else 0): grams are PARTITIONED
+    across the `sig_words` longs by h mod sig_words, so each word stays
+    sparse, and set bit (h >> 3) mod 64 of their word."""
+    return F.when(
+        F.pmod(h, F.lit(sig_words)) == i,
+        # shiftleft via call_function: the PySpark wrapper only takes
+        # literal bit counts, the SQL fn any int column
+        F.call_function(
+            "shiftleft",
+            F.lit(1).cast("long"),
+            F.pmod(F.shiftright(h, 3), F.lit(64)).cast("int"),
+        ),
+    ).otherwise(F.lit(0).cast("long"))
+
+
+def _jaccard_overlap_lb(t: float, n, n2):
+    """Shared distinct tokens a pair of profile sizes n, n2 needs for
+    jaccard_sim >= t: overlap / (n + n2 - overlap) >= t solves to
+    overlap >= t/(1+t) * (n + n2) — the positional filter's and the
+    Bloom cut's bound (its float `ceil` is perfbench/RECORD.md Findings 1)."""
+    return F.ceil(F.lit(t / (1.0 + t)) * (n + n2))
+
+
+def jaccard_candidates_ids(
+    prof: DataFrame,
+    id_col: str,
+    max_distance: float,
+    sig_words: int = 0,
+    max_gram_df: int | None = None,
+    *,
+    _salt_partitions: int | None = None,
+    _observation=None,
+    _broadcast_df: bool = False,
+    _persist: list | None = None,
+) -> DataFrame:
+    """SELF-join set-Jaccard candidates over a precomputed profile frame
+    (PPJoin, Xiao et al. WWW'08) — the reference's inverted index
+    (jaccard.rs:118-177) at corpus scale; shuffles ids + tokens, never key
+    strings.
+
+    `prof` columns: `id_col` (orderable; er passes the 128-bit kid struct),
+    `__fz_gs` (array of DISTINCT tokens: char q-grams or word shingles).
+    With t = 1 - max_distance > 0, prefix filtering (Chaudhuri et al.
+    ICDE'06) orders each key's tokens by global rarity (df, token); two
+    keys with jaccard_sim >= t must share a token within their first
+    n - ceil(t*n) + 1. Hot tokens are the commonest, so they sort last
+    and almost never land in a prefix — without the filter one hot token
+    makes the join quadratic in its df. The POSITIONAL filter then bounds
+    the best-possible overlap from the prefix positions of the shared
+    token, 1 + min(n - rn, n2 - rn2) >= ceil(t/(1+t) * (n + n2)), and the
+    size bound min/max >= t prunes length mismatch. These bounds take
+    `ceil` of float products, which can round an exact integer up
+    (ceil(0.4/1.4 * 14) = 5): pairs at exactly max_distance can drop
+    (perfbench/RECORD.md Findings 1). At t <= 0 every bound is vacuous
+    and this is the share-any-gram index (er_pipeline's edit family).
+
+    The prefix is built window-free: one groupBy + per-key sort of the
+    token array + posexplode of just the prefix — same shuffle volume as a
+    row_number window, no per-partition global sort, and the non-prefix
+    tail never re-explodes.
+
+    `max_gram_df`: tokens with df above it leave the index (APPROXIMATE
+    valve: pairs whose shared tokens were all capped are lost unless the
+    caller recovers them, as er_pipeline's sorted-neighborhood pass
+    does). Sizes and Bloom words stay full-profile, so every bound holds
+    for the true distance.
+
+    sig_words > 0: `prof` also carries Bloom words __fz_sig0..N-1
+    (`_sig_bit`'s scheme); the candidate rows carry both sides' words and
+    the popcount cut (`_popcount_cut`, s_min = ceil(t/(1+t) * (n + n2)))
+    runs in the same codegen stage as the join, before the caller's
+    distinct — carrying them on token rows costs sequential shuffle
+    bytes, probing two signature tables per raw candidate costs random
+    lookups. On the prefix path the words are RE-AGGREGATED as
+    map-side-combining bit_or()s over all the key's tokens (capped ones
+    included — the same values as the cached words), so the prefix
+    groupBy shuffles (id, df, token) rows plus 8 partially-combined longs
+    per id instead of 64 B of signature per token row.
+
+    Caller plan arguments (not options — the two callers differ here):
+    `_broadcast_df` broadcasts the token-df lookup (bounded char q-grams;
+    word shingles are unbounded at corpus scale, so AQE decides);
+    `_persist`, when given, receives the persisted token frame both join
+    sides read, for the caller to free after its write (Catalyst does not
+    reuse the exchange across the rename projection, so unpersisted the
+    whole token -> prefix chain runs twice); `_salt_partitions`
+    repartitions the probe side on the token; `_observation` observes the
+    raw candidate count (duplicates included, before the Bloom cut).
+
+    Returns (id_col, id_col+"2") rows with id < id2, NOT deduplicated: the
+    caller runs one distinct over these plus its complementary blocks.
+    """
+    t = 1.0 - float(max_distance)
+    id2 = id_col + "2"
+    sigw = [f"__fz_sig{i}" for i in range(sig_words)]
+    positional = t > 0
+    tok = prof.select(
+        id_col, F.size("__fz_gs").alias("__fz_n"), *([] if positional else sigw),
+        F.explode("__fz_gs").alias("__fz_g"),
+    )
+    gram_df = tok.groupBy("__fz_g").agg(F.count(F.lit(1)).alias("__fz_df"))
+    if max_gram_df:
+        gram_df = gram_df.where(F.col("__fz_df") <= max_gram_df)
+    # LEFT join: capped tokens keep a null df, so the prefix below drops
+    # them while the signature aggregation still sees the FULL profile
+    tok = tok.join(F.broadcast(gram_df) if _broadcast_df else gram_df, "__fz_g", "left")
+    n, n2 = F.col("__fz_n"), F.col("__fz_n_2")
+    if positional:
+        h = F.xxhash64("__fz_g")
+        agg = tok.groupBy(id_col).agg(
+            # collect_list skips the nulls: capped tokens leave the prefix
+            F.array_sort(
+                F.collect_list(
+                    F.when(F.col("__fz_df").isNotNull(), F.struct("__fz_df", "__fz_g"))
+                )
+            ).alias("__fz_s"),
+            F.first("__fz_n").alias("__fz_n"),
+            *[F.bit_or(_sig_bit(h, i, sig_words)).alias(c) for i, c in enumerate(sigw)],
+        )
+        plen = (n - F.ceil(F.lit(t) * n) + 1).cast("int")
+        tok = agg.select(
+            id_col, "__fz_n", *sigw,
+            F.posexplode(F.slice("__fz_s", 1, plen)).alias("__fz_p", "__fz_e"),
+        ).select(
+            id_col, "__fz_n", *sigw,
+            F.col("__fz_e.__fz_g").alias("__fz_g"), (F.col("__fz_p") + 1).alias("__fz_rn"),
+        )
+    else:
+        tok = tok.where(F.col("__fz_df").isNotNull()).withColumn("__fz_rn", F.lit(1))
+    tok = tok.select(id_col, "__fz_n", *sigw, "__fz_g", "__fz_rn")
+    if _persist is not None:
+        tok = tok.persist()
+        _persist.append(tok)
+    right = tok.select(
+        "__fz_g", F.col(id_col).alias(id2),
+        *[F.col(c).alias(c + "_2") for c in ("__fz_n", "__fz_rn", *sigw)],
+    )
+    left = tok.repartition(_salt_partitions, "__fz_g") if _salt_partitions else tok
+    cand = left.join(right, "__fz_g").where(F.col(id_col) < F.col(id2))
+    cand = cand.where(F.least(n, n2) >= F.ceil(F.lit(t) * F.greatest(n, n2)))
+    if positional or sig_words:
+        alpha = _jaccard_overlap_lb(t, n, n2)
+    if positional:
+        cand = cand.where(
+            F.lit(1) + F.least(n - F.col("__fz_rn"), n2 - F.col("__fz_rn_2")) >= alpha
+        )
+    if _observation is not None:
+        cand = cand.observe(_observation, F.count(F.lit(1)).alias("raw_candidates"))
+    if sig_words:
+        cand = cand.where(_popcount_cut(alpha, sig_words))
+    return cand.select(id_col, id2)
 
 
 def qgram_candidates_ids(

@@ -14,14 +14,18 @@ Scale notes:
 - SimHash reduces to 64 conditional sums in the same single aggregation
   shape; near-dup = equi-join on bit chunks (pigeonhole: h+1 chunks give
   full recall at hamming <= h).
-- Exact shingle-Jaccard dedup uses PPJoin prefix+positional filtering
-  (lossless), so one hot shingle ("the end of" with df in the millions)
-  cannot make the candidate join quadratic in its document frequency.
+- Exact shingle-Jaccard dedup runs the PPJoin prefix+positional
+  self-join builder shared with er_pipeline
+  (`blocking.jaccard_candidates_ids`), so one hot shingle ("the end of"
+  with df in the millions) cannot make the candidate join quadratic in its
+  document frequency.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from fozzie_spark.blocking import jaccard_candidates_ids
 
 # --------------------------------------------------------------------------
 # tokenization / shingles (shared)
@@ -86,75 +90,6 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str, normalize: bool = Tru
 # --------------------------------------------------------------------------
 
 
-def _jaccard_candidates(
-    base: DataFrame, max_distance: float, max_shingle_df: int | None = None
-) -> DataFrame:
-    """PPJoin candidate pairs (id1 < id2) over (id, sh) shingle-set rows.
-
-    Prefix filtering (Chaudhuri et al. ICDE'06 / Xiao et al. WWW'08) is
-    LOSSLESS for Jaccard: order each doc's distinct shingles by global
-    rarity (document frequency asc); two docs with jaccard_sim >= t =
-    1 - max_distance MUST share a shingle within their first
-    n - ceil(t*n) + 1 shingles. This is what keeps a 100 TB web corpus
-    tractable: a hot shingle ("the end of" at w=3, df in the millions) is
-    the COMMONEST shingle, so it sorts LAST and almost never lands in a
-    prefix — without the filter that one block alone is quadratic in its
-    df. The POSITIONAL filter then bounds best-possible overlap from the
-    prefix positions; the size-bound prune handles length mismatch.
-
-    `max_shingle_df` is an optional (approximate!) safety valve on top:
-    shingles with df above it are dropped from the index entirely —
-    recall can drop for doc pairs whose ONLY shared shingles are that hot.
-    The prefix filter already makes hot shingles cheap, so the default is
-    None (exact).
-
-    ref: the reference's inverted-index idea (jaccard.rs:118-177) applied
-    at corpus scale; same design as the ER pipeline (pipeline.py:150-221).
-    """
-    from pyspark.sql import Window
-
-    t = 1.0 - float(max_distance)
-    grams = base.select(
-        "id", F.size("sh").alias("n"), F.explode("sh").alias("g")
-    )
-    gram_df = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    if max_shingle_df:
-        gram_df = gram_df.where(F.col("df") <= max_shingle_df)
-    # NO broadcast hint (unlike the ER pipeline's char q-grams, distinct
-    # WORD shingles are unbounded at corpus scale) — the df lookup shuffles
-    # on g like the candidate join itself; AQE broadcasts when small
-    grams = grams.join(gram_df, "g")  # inner: drops capped shingles
-    if t > 0:
-        w = Window.partitionBy("id").orderBy(F.col("df").asc(), F.col("g").asc())
-        prefix_len = F.col("n") - F.ceil(F.lit(t) * F.col("n")) + 1
-        grams = grams.withColumn("rn", F.row_number().over(w)).where(
-            F.col("rn") <= prefix_len
-        )
-    else:
-        grams = grams.withColumn("rn", F.lit(1))
-    right = grams.select(
-        "g",
-        F.col("id").alias("id2"),
-        F.col("n").alias("n2"),
-        F.col("rn").alias("rn2"),
-    )
-    cand = (
-        grams.join(right, "g")
-        .where(F.col("id") < F.col("id2"))
-        # size-bound prune: jaccard_sim >= t needs min/max >= t
-        .where(F.least("n", "n2") >= F.ceil(F.lit(t) * F.greatest("n", "n2")))
-    )
-    if t > 0:
-        # positional filter (PPJoin): best-possible overlap from the prefix
-        # positions of the shared shingle must reach ceil(t/(1+t)*(n+n2))
-        alpha = F.ceil(F.lit(t / (1.0 + t)) * (F.col("n") + F.col("n2")))
-        cand = cand.where(
-            F.lit(1) + F.least(F.col("n") - F.col("rn"), F.col("n2") - F.col("rn2"))
-            >= alpha
-        )
-    return cand.select(F.col("id").alias("id1"), "id2").distinct()
-
-
 def jaccard_dedup_pairs(
     df: DataFrame,
     id_col: str,
@@ -165,17 +100,29 @@ def jaccard_dedup_pairs(
 ) -> DataFrame:
     """Exact word-shingle Jaccard near-dup pairs (id1 < id2, jaccard_dist).
 
-    PPJoin blocking (prefix filter + positional filter + size bound — see
-    `_jaccard_candidates`), then exact set-Jaccard computed JVM-side on the
-    shingle arrays. Candidate volume stays near-linear even under hot
-    shingles (one shingle shared by every doc); `max_shingle_df` remains an
-    approximate valve for adversarial corpora.
+    PPJoin blocking over the shingle sets (prefix filter + positional
+    filter + size bound — `blocking.jaccard_candidates_ids`, the builder
+    er_pipeline's jaccard stage runs), then exact set-Jaccard computed
+    JVM-side on the shingle arrays. Candidate volume stays near-linear even
+    under hot shingles (one shingle shared by every doc: the commonest
+    shingle sorts last and almost never lands in a prefix);
+    `max_shingle_df` is an optional approximate valve for adversarial
+    corpora — shingles with df above it leave the index, so recall can
+    drop for doc pairs whose ONLY shared shingles are that hot. The
+    default None keeps every shingle.
     """
     base = df.select(
         F.col(id_col).alias("id"),
         F.array_distinct(word_shingles_col(text_col, shingle_w)).alias("sh"),
     ).where(F.size("sh") > 0)
-    cand = _jaccard_candidates(base, max_distance, max_shingle_df)
+    cand = (
+        jaccard_candidates_ids(
+            base.select("id", F.col("sh").alias("__fz_gs")), "id", max_distance,
+            max_gram_df=max_shingle_df,
+        )
+        .select(F.col("id").alias("id1"), "id2")
+        .distinct()
+    )
     a = base.select(F.col("id").alias("id1"), F.col("sh").alias("sh1"))
     b = base.select(F.col("id").alias("id2"), F.col("sh").alias("sh2"))
     inter = F.size(F.array_intersect("sh1", "sh2"))

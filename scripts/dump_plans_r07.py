@@ -89,8 +89,8 @@ except TypeError:  # before-tree: no `hashed` kwarg
     uniq_cos = keys.select(
         "key", "kid", _count_map_col("key", 3).alias("cm"),
         *_bloom_sig_cols(_gs))
-_sw = [F.col(f"s{i}").alias(f"__fz_sig{i}") for i in range(NSIG)]
-prof = uniq_cos.select("kid", F.col("cm").alias("__fz_cm"), *_sw)
+prof = uniq_cos.select(
+    "kid", F.col("cm").alias("__fz_cm"), *[f"__fz_sig{i}" for i in range(NSIG)])
 dump("er_cosine_candidates", B.cosine_candidates_ids(
     prof, "kid", 0.25, prefix_mode="prefix", sig_words=NSIG,
     max_gram_df=10_000))

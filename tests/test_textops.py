@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from fozzie_spark import ann, media, textops
+from fozzie_spark import ann, blocking, media, textops
 
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog"),
@@ -136,7 +136,13 @@ def test_jaccard_hot_shingle_stays_linear(spark):
         "id",
         F.array_distinct(textops.word_shingles_col("text", 3)).alias("sh"),
     ).where(F.size("sh") > 0)
-    n_cand = textops._jaccard_candidates(base, max_distance=0.5).count()
+    n_cand = (
+        blocking.jaccard_candidates_ids(
+            base.select("id", F.col("sh").alias("__fz_gs")), "id", max_distance=0.5
+        )
+        .distinct()
+        .count()
+    )
     assert n_cand <= n  # naive share-a-shingle blocking would give ~n^2/2
 
     got = {
